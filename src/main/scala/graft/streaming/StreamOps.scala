@@ -2,7 +2,8 @@ package graft.streaming
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
+  KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
@@ -175,7 +176,12 @@ final case class PitFact(custkey: Long, sd: String, version: Long,
   *  - state lives in the executor-side state store keyed by the group key,
   *    so parallelism scales with key cardinality — no driver-side state;
   *  - watermarks bound state: windowed aggregates evict closed windows,
-  *    timeouts/TTL evict idle keys (the 100 TB memory story).
+  *    timeouts/TTL evict idle keys (the 100 TB memory story);
+  *  - no builder changes session config: the transformWithState builders
+  *    (`*Tws`, gap-fill, interpolation, activity) need the RocksDB provider
+  *    set on the session, and Spark rejects them on the HDFS store at the
+  *    first batch with
+  *    `UNSUPPORTED_FEATURE.STATE_STORE_MULTIPLE_COLUMN_FAMILIES`.
   */
 object StreamOps {
 
@@ -198,6 +204,75 @@ object StreamOps {
   def cents(v: Double): Long =
     BigDecimal(v * 100).setScale(0, BigDecimal.RoundingMode.HALF_UP).toLong
 
+  /** One keyed state machine, written once for both state APIs: `step`
+    * folds one key's rows of a micro-batch into the key's next state and
+    * the rows it emits; `zero` is an unseen key's state; `name` names the
+    * transformWithState ValueState (part of that API's checkpoint).
+    */
+  private final case class Machine[K, S, I, O](
+      name: String, zero: S, step: (K, S, Iterator[I]) => (S, Iterator[O]))
+
+  /** The GroupState (`flatMapGroupsWithState`) adapter of a [[Machine]]. */
+  private def viaGroupState[K, I, S: Encoder, O: Encoder](
+      groups: KeyValueGroupedDataset[K, I], m: Machine[K, S, I, O],
+      mode: OutputMode): Dataset[O] =
+    groups.flatMapGroupsWithState(mode, GroupStateTimeout.NoTimeout()) {
+      (key: K, rows: Iterator[I], st: GroupState[S]) =>
+        val (next, out) = m.step(key, st.getOption.getOrElse(m.zero), rows)
+        st.update(next)
+        out
+    }
+
+  /** The transformWithState adapter of a [[Machine]]: one ValueState per
+    * key. State TTL is processing-time-based and requires that time mode.
+    */
+  private def viaValueState[K, I, S: Encoder, O: Encoder](
+      groups: KeyValueGroupedDataset[K, I], m: Machine[K, S, I, O],
+      mode: OutputMode, ttl: TTLConfig = TTLConfig.NONE): Dataset[O] =
+    groups.transformWithState(
+      new MachineProcessor(m, implicitly[Encoder[S]], ttl),
+      if (ttl == TTLConfig.NONE) TimeMode.None() else TimeMode.ProcessingTime(),
+      mode)
+
+  private final class MachineProcessor[K, I, S, O](
+      m: Machine[K, S, I, O], enc: Encoder[S], ttl: TTLConfig)
+      extends StatefulProcessor[K, I, O] {
+    @transient private var st: ValueState[S] = _
+
+    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+      st = getHandle.getValueState[S](m.name, enc, ttl)
+
+    override def handleInputRows(
+        key: K, rows: Iterator[I], timerValues: TimerValues): Iterator[O] = {
+      val (next, out) =
+        m.step(key, if (st.exists()) st.get() else m.zero, rows)
+      st.update(next)
+      out
+    }
+  }
+
+  /** The in-order guard every order-sensitive event fold runs under:
+    * within a batch, rows fold in (ts, event_id) order; across batches the
+    * fold assumes in-order delivery and checks it. Before each event's
+    * `step` (which also gets the event's µs time), `mark` writes the
+    * state's guard fields: maxTs, the latest event time seen (-1 = none),
+    * and nOoo, incremented by an event older than the latest one of an
+    * earlier batch. A violated feed thus surfaces as n_ooo > 0 instead of
+    * silently diverging from the batch twin.
+    */
+  private def inOrder[S](st: S, maxTs: Long, nOoo: Long,
+      rows: Iterator[Event])(mark: (S, Long, Long) => S)(
+      step: (S, Event, Long) => S): S = {
+    var (mx, n) = (maxTs, nOoo)
+    rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foldLeft(st) {
+      (s, e) =>
+        val t = micros(e.ts)
+        if (maxTs != -1L && t < maxTs) n += 1
+        mx = math.max(mx, t)
+        step(mark(s, mx, n), e, t)
+    }
+  }
+
   /** The canonical Spark-Streaming demo — streaming word count over a line
     * stream (`flatMap(_.split(" ")) → map((_,1)) → updateStateByKey` in the
     * classic API; incremental groupBy here). Batch twin: the h5_explode
@@ -214,20 +289,21 @@ object StreamOps {
     */
   def runningCounts(events: Dataset[Event]): Dataset[KeyCount] = {
     import events.sparkSession.implicits._
-    events
-      .groupByKey(e => (e.user_id, e.event_type))
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (key: (Long, String), rows: Iterator[Event],
-         state: GroupState[CountState]) =>
-          val prev = state.getOption.getOrElse(CountState(0L, 0L))
-          var n = prev.n
-          var cents = prev.cents
-          rows.foreach { e => n += 1; cents += StreamOps.cents(e.value) }
-          val next = CountState(n, cents)
-          state.update(next)
-          KeyCount(key._1, key._2, next.n, next.cents)
-      }
+    viaGroupState(events.groupByKey(e => (e.user_id, e.event_type)),
+      counts[(Long, String)](identity), OutputMode.Update())
   }
+
+  /** The running count/sum machine; `label` maps the group key to the
+    * emitted (user_id, event_type).
+    */
+  private def counts[K](label: K => (Long, String)) =
+    Machine[K, CountState, Event, KeyCount]("count", CountState(0L, 0L),
+      (key, st, rows) => {
+        var (n, c) = (st.n, st.cents)
+        rows.foreach { e => n += 1; c += StreamOps.cents(e.value) }
+        val (uid, typ) = label(key)
+        (CountState(n, c), Iterator.single(KeyCount(uid, typ, n, c)))
+      })
 
   /** Streaming distinct-cardinality per key with CONSTANT state: the keyed
     * state is j47's 256-register HLL file (one small array per key — 256
@@ -407,24 +483,19 @@ object StreamOps {
       .groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[Event], state: GroupState[FunnelState]) =>
-          var st = state.getOption.getOrElse(
+          val st0 = state.getOption.getOrElse(
             FunnelState(None_, None_, None_, None_, 0L))
-          val prevMax = st.maxTs
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != None_ && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
+          val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+              (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, t) =>
             e.event_type match {
-              case "view" if st.t1 == None_ =>
-                st = st.copy(t1 = t)
+              case "view" if st.t1 == None_ => st.copy(t1 = t)
               case "click" if st.t1 != None_ && st.t2 == None_ &&
                   t > st.t1 =>
-                st = st.copy(t2 = t)
+                st.copy(t2 = t)
               case "purchase" if st.t2 != None_ && st.t3 == None_ &&
                   t > st.t2 =>
-                st = st.copy(t3 = t)
-              case _ => ()
+                st.copy(t3 = t)
+              case _ => st
             }
           }
           state.update(st)
@@ -458,18 +529,14 @@ object StreamOps {
       .flatMapGroupsWithState(OutputMode.Update(),
         GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[Event], state: GroupState[MarkovState]) =>
-          var st = state.getOption.getOrElse(
+          val st0 = state.getOption.getOrElse(
             MarkovState("", hasPrev = false, -1L, 0L))
-          val prevMax = st.maxTs
           val out = Vector.newBuilder[Transition]
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != -1L && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
+          val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+              (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, _) =>
             if (st.hasPrev)
               out += Transition(uid, st.prevType, e.event_type, st.nOoo)
-            st = st.copy(prevType = e.event_type, hasPrev = true)
+            st.copy(prevType = e.event_type, hasPrev = true)
           }
           state.update(st)
           out.result().iterator
@@ -496,65 +563,27 @@ object StreamOps {
     */
   def ewmaStream(events: Dataset[Event]): Dataset[UserEwma] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Event], state: GroupState[EwmaState]) =>
-          var st = state.getOption.getOrElse(
-            EwmaState(0.0, hasS = false, 0L, -1L, 0L))
-          val prevMax = st.maxTs
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != -1L && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
-            val s = if (st.hasS) 0.75 * st.s + 0.25 * e.value else e.value
-            st = st.copy(s = s, hasS = true, n = st.n + 1)
-          }
-          state.update(st)
-          UserEwma(uid, st.n, st.s, st.nOoo)
-      }
+    viaGroupState(events.groupByKey(_.user_id), ewma, OutputMode.Update())
   }
 
-  /** transformWithState port of [[ewmaStream]] — the dual-API discipline
-    * (same state algebra on the modern API under the RocksDB provider, so
-    * the two implementations cannot fork semantically; the spec runs the
-    * same batches through both and asserts identical final rows).
+  /** [[ewmaStream]]'s machine on transformWithState — the dual-API
+    * discipline (the spec runs the same batches through both and asserts
+    * identical final rows).
     */
-  final class EwmaProcessor
-      extends StatefulProcessor[Long, Event, UserEwma] {
-    @transient private var st: ValueState[EwmaState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[EwmaState](
-        "ewma", Encoders.product[EwmaState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserEwma] = {
-      var s = if (st.exists()) st.get()
-              else EwmaState(0.0, hasS = false, 0L, -1L, 0L)
-      val prevMax = s.maxTs
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        val t = micros(e.ts)
-        if (prevMax != -1L && t < prevMax) s = s.copy(nOoo = s.nOoo + 1)
-        if (t > s.maxTs) s = s.copy(maxTs = t)
-        val v = if (s.hasS) 0.75 * s.s + 0.25 * e.value else e.value
-        s = s.copy(s = v, hasS = true, n = s.n + 1)
-      }
-      st.update(s)
-      Iterator.single(UserEwma(key, s.n, s.s, s.nOoo))
-    }
-  }
-
   def ewmaStreamTws(events: Dataset[Event]): Dataset[UserEwma] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    events.groupByKey(_.user_id)
-      .transformWithState(new EwmaProcessor, TimeMode.None(),
-        OutputMode.Update())
+    viaValueState(events.groupByKey(_.user_id), ewma, OutputMode.Update())
   }
+
+  private val ewma = Machine[Long, EwmaState, Event, UserEwma]("ewma",
+    EwmaState(0.0, hasS = false, 0L, -1L, 0L), (uid, st0, rows) => {
+      val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+          (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, _) =>
+        val s = if (st.hasS) 0.75 * st.s + 0.25 * e.value else e.value
+        st.copy(s = s, hasS = true, n = st.n + 1)
+      }
+      (st, Iterator.single(UserEwma(uid, st.n, st.s, st.nOoo)))
+    })
 
   /** Streaming gap-fill — the twin of the registered `n5_gapfill_ffill`
     * batch query, and the operator that shows WHY densification needs
@@ -657,9 +686,6 @@ object StreamOps {
 
   def gapFillStream(events: Dataset[Event]): Dataset[GapBucket] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events.withWatermark("ts", "10 minutes")
       .groupByKey(_.event_type)
       .transformWithState(new GapFillProcessor,
@@ -749,9 +775,6 @@ object StreamOps {
 
   def gapInterpStream(events: Dataset[Event]): Dataset[InterpBucket] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events.withWatermark("ts", "10 minutes")
       .groupByKey(_.event_type)
       .transformWithState(new GapInterpProcessor,
@@ -776,24 +799,18 @@ object StreamOps {
     events.groupByKey(_.user_id)
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[Event], state: GroupState[HoltState]) =>
-          var st = state.getOption.getOrElse(
+          val st0 = state.getOption.getOrElse(
             HoltState(0.0, 0.0, 0.0, 0L, -1L, 0L))
-          val prevMax = st.maxTs
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != -1L && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
+          val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+              (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, _) =>
             st.n match {
-              case 0L => st = st.copy(l = e.value, b = 0.0, x1 = e.value,
-                n = 1L)
-              case 1L => st = st.copy(l = e.value, b = e.value - st.x1,
-                n = 2L)
+              case 0L => st.copy(l = e.value, b = 0.0, x1 = e.value, n = 1L)
+              case 1L => st.copy(l = e.value, b = e.value - st.x1, n = 2L)
               case n =>
                 val nl = 0.25 * e.value + 0.75 * (st.l + st.b)
                 val nb = 0.25 * (0.25 * e.value + 0.75 * (st.l + st.b)
                   - st.l) + 0.75 * st.b
-                st = st.copy(l = nl, b = nb, n = n + 1)
+                st.copy(l = nl, b = nb, n = n + 1)
             }
           }
           state.update(st)
@@ -822,27 +839,29 @@ object StreamOps {
     */
   def cusumStream(events: Dataset[Event]): Dataset[UserCusum] = {
     import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
-        (uid: Long, rows: Iterator[Event],
-         state: GroupState[CusumState]) =>
-          var st = state.getOption.getOrElse(
-            CusumState(0.0, 0L, 0L, -1L, 0L))
-          val prevMax = st.maxTs
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != -1L && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
-            val raw = math.max(0.0, st.s + e.value - 60.0)
-            st = if (raw > 80.0)
-              st.copy(s = 0.0, alarms = st.alarms + 1, n = st.n + 1)
-            else st.copy(s = raw, n = st.n + 1)
-          }
-          state.update(st)
-          UserCusum(uid, st.n, st.alarms, st.s, st.nOoo)
-      }
+    viaGroupState(events.groupByKey(_.user_id), cusum, OutputMode.Update())
   }
+
+  /** [[cusumStream]]'s machine on transformWithState — the dual-API
+    * discipline (the spec runs the same batches through both and asserts
+    * identical final rows).
+    */
+  def cusumStreamTws(events: Dataset[Event]): Dataset[UserCusum] = {
+    import events.sparkSession.implicits._
+    viaValueState(events.groupByKey(_.user_id), cusum, OutputMode.Update())
+  }
+
+  private val cusum = Machine[Long, CusumState, Event, UserCusum]("cusum",
+    CusumState(0.0, 0L, 0L, -1L, 0L), (uid, st0, rows) => {
+      val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+          (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, _) =>
+        val raw = math.max(0.0, st.s + e.value - 60.0)
+        if (raw > 80.0)
+          st.copy(s = 0.0, alarms = st.alarms + 1, n = st.n + 1)
+        else st.copy(s = raw, n = st.n + 1)
+      }
+      (st, Iterator.single(UserCusum(uid, st.n, st.alarms, st.s, st.nOoo)))
+    })
 
   /** Streaming Holt–Winters — the twin of the registered
     * `n12_holt_winters` batch query, consuming the DENSE hourly series (a
@@ -917,49 +936,6 @@ object StreamOps {
       }
   }
 
-  /** transformWithState port of [[cusumStream]] — the dual-API discipline
-    * (same state algebra on the modern API under the RocksDB provider, so
-    * the two implementations cannot fork semantically; the spec runs the
-    * same batches through both and asserts identical final rows).
-    */
-  final class CusumProcessor
-      extends StatefulProcessor[Long, Event, UserCusum] {
-    @transient private var st: ValueState[CusumState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      st = getHandle.getValueState[CusumState](
-        "cusum", Encoders.product[CusumState], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[UserCusum] = {
-      var s = if (st.exists()) st.get()
-              else CusumState(0.0, 0L, 0L, -1L, 0L)
-      val prevMax = s.maxTs
-      rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-        val t = micros(e.ts)
-        if (prevMax != -1L && t < prevMax) s = s.copy(nOoo = s.nOoo + 1)
-        if (t > s.maxTs) s = s.copy(maxTs = t)
-        val raw = math.max(0.0, s.s + e.value - 60.0)
-        s = if (raw > 80.0)
-          s.copy(s = 0.0, alarms = s.alarms + 1, n = s.n + 1)
-        else s.copy(s = raw, n = s.n + 1)
-      }
-      st.update(s)
-      Iterator.single(UserCusum(key, s.n, s.alarms, s.s, s.nOoo))
-    }
-  }
-
-  def cusumStreamTws(events: Dataset[Event]): Dataset[UserCusum] = {
-    import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    events.groupByKey(_.user_id)
-      .transformWithState(new CusumProcessor, TimeMode.None(),
-        OutputMode.Update())
-  }
-
   /** Streaming CEP pattern counter — the twin of the registered
     * `n7_seq_pattern` batch query, and the reason that query pins the LAZY
     * quantifier: leftmost-shortest non-overlapping `v[^e]*?p` matching is
@@ -979,20 +955,16 @@ object StreamOps {
       .mapGroupsWithState(GroupStateTimeout.NoTimeout) {
         (uid: Long, rows: Iterator[Event],
          state: GroupState[PatternState]) =>
-          var st = state.getOption.getOrElse(
+          val st0 = state.getOption.getOrElse(
             PatternState(armed = false, 0L, -1L, 0L))
-          val prevMax = st.maxTs
-          rows.toSeq.sortBy(e => (micros(e.ts), e.event_id)).foreach { e =>
-            val t = micros(e.ts)
-            if (prevMax != -1L && t < prevMax)
-              st = st.copy(nOoo = st.nOoo + 1)
-            if (t > st.maxTs) st = st.copy(maxTs = t)
+          val st = inOrder(st0, st0.maxTs, st0.nOoo, rows)(
+              (s, m, n) => s.copy(maxTs = m, nOoo = n)) { (st, e, _) =>
             e.event_type match {
-              case "view"  => st = st.copy(armed = true)
-              case "error" => st = st.copy(armed = false)
+              case "view"  => st.copy(armed = true)
+              case "error" => st.copy(armed = false)
               case "purchase" if st.armed =>
-                st = st.copy(armed = false, conv = st.conv + 1)
-              case _ => ()
+                st.copy(armed = false, conv = st.conv + 1)
+              case _ => st
             }
           }
           state.update(st)
@@ -1091,49 +1063,17 @@ object StreamOps {
       }
   }
 
-  /** i5 (modern form) — transformWithState processor with ValueState + TTL:
-    * per-user running count whose state auto-expires after `ttl`. TTL bounds
-    * state for abandoned keys without any timer bookkeeping — the 100 TB
-    * default for "state must not grow forever".
+  /** i5 (modern form) — transformWithState with ValueState + TTL:
+    * per-user running count (event_type "all") whose state auto-expires
+    * after `ttl`. TTL bounds state for abandoned keys without any timer
+    * bookkeeping — the 100 TB default for "state must not grow forever".
     */
-  final class RunningCountProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, Event, KeyCount] {
-    @transient private var countState: ValueState[CountState] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      countState = getHandle.getValueState[CountState](
-        "count", Encoders.product[CountState], ttl)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[KeyCount] = {
-      val prev =
-        if (countState.exists()) countState.get() else CountState(0L, 0L)
-      var n = prev.n
-      var cents = prev.cents
-      rows.foreach { e => n += 1; cents += StreamOps.cents(e.value) }
-      val next = CountState(n, cents)
-      countState.update(next)
-      Iterator.single(KeyCount(key, "all", next.n, next.cents))
-    }
-  }
-
   def runningCountsTws(
       events: Dataset[Event],
       ttl: TTLConfig = TTLConfig.NONE): Dataset[KeyCount] = {
     import events.sparkSession.implicits._
-    // transformWithState requires a multi-column-family store — RocksDB,
-    // which is also the provider this engine standardizes on at scale
-    // (incremental checkpoints, state >> heap).
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    // state TTL is processing-time-based and requires that time mode
-    val mode = if (ttl == TTLConfig.NONE) TimeMode.None()
-               else TimeMode.ProcessingTime()
-    events.groupByKey(_.user_id)
-      .transformWithState(new RunningCountProcessor(ttl),
-        mode, OutputMode.Update())
+    viaValueState(events.groupByKey(_.user_id),
+      counts[Long](uid => (uid, "all")), OutputMode.Update(), ttl)
   }
 
   /** i5 (full surface) — transformWithState with ListState + event-time
@@ -1199,9 +1139,6 @@ object StreamOps {
   def activityWithTimers(
       events: Dataset[Event], gapMinutes: Int = 30): Dataset[UserActivity] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events.withWatermark("ts", "10 minutes")
       .groupByKey(_.user_id)
       .transformWithState(new ActivityProcessor(gapMinutes * 60000L),
@@ -1246,9 +1183,6 @@ object StreamOps {
 
   def typeCountsTws(events: Dataset[Event]): Dataset[TypeCounts] = {
     import events.sparkSession.implicits._
-    events.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     events.groupByKey(_.user_id)
       .transformWithState(new TypeCountProcessor,
         TimeMode.None(), OutputMode.Update())
@@ -1533,66 +1467,38 @@ object StreamOps {
     */
   def chunkDedupStream(chunks: Dataset[ChunkIn]): Dataset[ChunkDecision] = {
     import chunks.sparkSession.implicits._
-    chunks.groupByKey(_.ck)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (ck: String, rows: Iterator[ChunkIn], state: GroupState[Boolean]) =>
-          var seen = state.getOption.getOrElse(false)
-          val out = rows.toSeq.sortBy(r => (r.doc_id, r.idx)).map { r =>
-            val kept = !seen
-            seen = true
-            ChunkDecision(r.doc_id, r.idx, ck, kept)
-          }
-          state.update(seen)
-          out.iterator
-      }
+    viaGroupState(chunks.groupByKey(_.ck), chunkFirst, OutputMode.Append())
   }
 
-  /** [[chunkDedupStream]] on the MODERN state API: the same per-chunk-hash
-    * first-occurrence semantics as a `StatefulProcessor` with one
-    * `ValueState[Boolean]` per key (transformWithState is where new
-    * stateful operators land — timers, TTL, and the state trio all hang
-    * off the same handle, and RocksDB changelog checkpointing covers it).
-    * Kept decision-compatible with the MGWS form by construction: same
-    * intra-batch (doc_id, idx) ordering, same first-wins rule —
-    * StreamingSpec asserts both forms equal the batch j75 decisions.
-    */
-  final class ChunkDedupProcessor
-      extends StatefulProcessor[String, ChunkIn, ChunkDecision] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[ChunkIn],
-        timerValues: TimerValues): Iterator[ChunkDecision] = {
-      var s = seen.exists() && seen.get()
-      val out = rows.toSeq.sortBy(r => (r.doc_id, r.idx)).map { r =>
-        val kept = !s
-        s = true
-        ChunkDecision(r.doc_id, r.idx, key, kept)
-      }
-      seen.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[chunkDedupStream]] via transformWithState (see
-    * [[ChunkDedupProcessor]]).
+  /** [[chunkDedupStream]]'s machine on transformWithState: one
+    * `ValueState[Boolean]` per chunk hash, decision-compatible with the
+    * MGWS form by construction — StreamingSpec asserts both forms equal
+    * the batch j75 decisions.
     */
   def chunkDedupStreamTws(chunks: Dataset[ChunkIn]): Dataset[ChunkDecision] = {
     import chunks.sparkSession.implicits._
-    // transformWithState needs column families → RocksDB provider (same
-    // requirement and same conf line as the other TWS operators here)
-    chunks.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    chunks.groupByKey(_.ck)
-      .transformWithState(new ChunkDedupProcessor,
-        TimeMode.None(), OutputMode.Append())
+    viaValueState(chunks.groupByKey(_.ck), chunkFirst, OutputMode.Append())
   }
+
+  private val chunkFirst = firstArrival[String, ChunkIn, ChunkDecision,
+    (Long, Long)](r => (r.doc_id, r.idx))((ck, r, first) =>
+    ChunkDecision(r.doc_id, r.idx, ck, first))
+
+  /** The seen-set machine of the first-occurrence folds: a key's rows
+    * decide in `order`, and only the first row the key ever sees is
+    * `first`.
+    */
+  private def firstArrival[K, I, O, T: Ordering](order: I => T)(
+      emit: (K, I, Boolean) => O) =
+    Machine[K, Boolean, I, O]("seen", false, (key, seen0, rows) => {
+      var seen = seen0
+      val out = rows.toSeq.sortBy(order).map { r =>
+        val first = !seen
+        seen = true
+        emit(key, r, first)
+      }
+      (seen, out.iterator)
+    })
 
   /** Streaming per-doc n-gram novelty — j92's twin on an unbounded
     * corpus, the one corpus-diagnostic family that still lacked an
@@ -1615,62 +1521,21 @@ object StreamOps {
     */
   def ngramNoveltyStream(grams: Dataset[GramIn]): Dataset[GramDecision] = {
     import grams.sparkSession.implicits._
-    grams.groupByKey(_.g)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (g: String, rows: Iterator[GramIn], state: GroupState[Boolean]) =>
-          var seen = state.getOption.getOrElse(false)
-          val out = rows.toSeq.sortBy(_.doc_id).map { r =>
-            val novel = !seen
-            seen = true
-            GramDecision(r.doc_id, g, r.cnt, novel)
-          }
-          state.update(seen)
-          out.iterator
-      }
+    viaGroupState(grams.groupByKey(_.g), gramFirst, OutputMode.Append())
   }
 
-  /** [[ngramNoveltyStream]] on the MODERN state API (the dual-API
-    * discipline every seen-set operator here follows): one
-    * ValueState[Boolean] per gram under the RocksDB provider, identical
-    * first-arrival credit — the spec runs both forms and asserts they
-    * fold to the same batch j92 scores.
-    */
-  final class NgramNoveltyProcessor
-      extends StatefulProcessor[String, GramIn, GramDecision] {
-    @transient private var seen: ValueState[Boolean] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      seen = getHandle.getValueState[Boolean](
-        "seen", Encoders.scalaBoolean, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: String, rows: Iterator[GramIn],
-        timerValues: TimerValues): Iterator[GramDecision] = {
-      var s = seen.exists() && seen.get()
-      val out = rows.toSeq.sortBy(_.doc_id).map { r =>
-        val novel = !s
-        s = true
-        GramDecision(r.doc_id, key, r.cnt, novel)
-      }
-      seen.update(s)
-      out.iterator
-    }
-  }
-
-  /** [[ngramNoveltyStream]] via transformWithState (see
-    * [[NgramNoveltyProcessor]]).
+  /** [[ngramNoveltyStream]]'s machine on transformWithState (the dual-API
+    * discipline every seen-set operator here follows) — the spec runs both
+    * forms and asserts they fold to the same batch j92 scores.
     */
   def ngramNoveltyStreamTws(
       grams: Dataset[GramIn]): Dataset[GramDecision] = {
     import grams.sparkSession.implicits._
-    grams.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    grams.groupByKey(_.g)
-      .transformWithState(new NgramNoveltyProcessor,
-        TimeMode.None(), OutputMode.Append())
+    viaValueState(grams.groupByKey(_.g), gramFirst, OutputMode.Append())
   }
+
+  private val gramFirst = firstArrival[String, GramIn, GramDecision, Long](
+    _.doc_id)((g, r, first) => GramDecision(r.doc_id, g, r.cnt, first))
 
   /** Streaming point-in-time enrichment — j79's twin and the engine's
     * stream–TABLE join (the Kafka-Streams KTable shape): ONE keyed
@@ -1709,54 +1574,12 @@ object StreamOps {
       }
   }
 
-  /** [[scd2Stream]]'s island logic as a [[StatefulProcessor]]: ValueState
-    * holds the one open (status, valid_from, version) triple per
-    * dimension key — the same state shape, on the API that brings TTL,
-    * timers, and column families to the SCD2 maintainer.
-    */
-  final class Scd2Processor
-      extends StatefulProcessor[Long, DimIn, Scd2Closed] {
-    @transient private var cur: ValueState[Scd2State] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      cur = getHandle.getValueState[Scd2State](
-        "cur", Encoders.product[Scd2State], TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: Long, rows: Iterator[DimIn],
-        timerValues: TimerValues): Iterator[Scd2Closed] = {
-      var c = if (cur.exists()) cur.get() else null
-      val closed = List.newBuilder[Scd2Closed]
-      rows.toSeq.sortBy(r => (r.dt, r.ok)).foreach { r =>
-        val (next, closedOpt) = scd2Step(c, r.status, r.dt)
-        closedOpt.foreach { case (p, to) =>
-          closed += Scd2Closed(key, p.status, p.valid_from, to, p.version)
-        }
-        c = next
-      }
-      if (c != null) cur.update(c)
-      closed.result().iterator
-    }
-  }
-
-  /** [[scd2Stream]] via transformWithState (see [[Scd2Processor]]).
-    *
-    * NOTE (shared with [[chunkDedupStreamTws]]): transformWithState
-    * requires column families, so this SETS the session's state-store
-    * provider to RocksDB and the change persists for streaming queries
-    * started afterwards — callers that also run non-TWS queries on the
-    * heap provider should save/restore
-    * `spark.sql.streaming.stateStore.providerClass` around this call
-    * (the test suite's withRocksDB wrapper is that pattern).
+  /** [[scd2Stream]]'s machine on transformWithState: a ValueState holds
+    * the one open (status, valid_from, version) triple per dimension key.
     */
   def scd2StreamTws(dims: Dataset[DimIn]): Dataset[Scd2Closed] = {
     import dims.sparkSession.implicits._
-    dims.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    dims.groupByKey(_.custkey)
-      .transformWithState(new Scd2Processor,
-        TimeMode.None(), OutputMode.Append())
+    viaValueState(dims.groupByKey(_.custkey), scd2, OutputMode.Append())
   }
 
   /** Streaming token-budget histogram maintenance — j71's twin: documents
@@ -1999,75 +1822,13 @@ object StreamOps {
       checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import qi.sparkSession.implicits._
-    def bands(k: Long): (Long, Long, Long) =
-      if (k <= 0L) (0L, 0L, 0L)
-      else if (k == 1L) (1L, 0L, 0L)
-      else if (k < 5L) (0L, 1L, 0L)
-      else (0L, 0L, 1L)
-    val deltas = qi
-      .groupByKey(q => (q.lang, q.source, q.len_bucket))
-      .flatMapGroupsWithState(OutputMode.Update(),
-        GroupStateTimeout.NoTimeout()) {
-        (key: (String, String, Long), rows: Iterator[QiIn],
-            st: GroupState[Long]) =>
-          val k0 = st.getOption.getOrElse(0L)
-          val k1 = k0 + rows.size.toLong
-          st.update(k1)
-          val ((a0, b0, c0), (a1, b1, c1)) = (bands(k0), bands(k1))
-          def atRisk(k: Long): Long = if (k < 5L) k else 0L
-          Iterator.single(QiBandDelta(key._2,
-            a1 - a0, b1 - b0, c1 - c0, atRisk(k1) - atRisk(k0)))
-      }
-    val writer = deltas.writeStream.outputMode("update")
-    checkpointDir.foreach(writer.option("checkpointLocation", _))
-    writer
-      .foreachBatch { (batch: Dataset[QiBandDelta], id: Long) =>
-        val rows = batch.groupBy("source")
-          .agg(sum("d_k1"), sum("d_k2_4"), sum("d_k5"), sum("d_at_risk"))
-          .collect()
-          .map(r => AnonDelta(id, r.getString(0), r.getLong(1),
-            r.getLong(2), r.getLong(3), r.getLong(4)))
-          .sortBy(_.source).toSeq
-        sink(rows)
-      }
-      .start()
+    anonDeltaSink(viaGroupState(qiGroups(qi), qiCount, OutputMode.Update()),
+      sink, checkpointDir)
   }
 
-  /** [[kAnonymityStream]]'s delta step as a transformWithState
-    * StatefulProcessor — the dual-API discipline (chunk dedup and SCD2
-    * are ported the same way): one ValueState[Long] group count per QI
-    * key, identical band-transition algebra, so the two API surfaces
-    * cannot fork (the spec runs both against the same corpus and batch
-    * j86).
-    */
-  final class KAnonProcessor
-      extends StatefulProcessor[(String, String, Long), QiIn, QiBandDelta] {
-    @transient private var count: ValueState[Long] = _
-
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      count = getHandle.getValueState[Long](
-        "count", Encoders.scalaLong, TTLConfig.NONE)
-
-    override def handleInputRows(
-        key: (String, String, Long), rows: Iterator[QiIn],
-        timerValues: TimerValues): Iterator[QiBandDelta] = {
-      def bands(k: Long): (Long, Long, Long) =
-        if (k <= 0L) (0L, 0L, 0L)
-        else if (k == 1L) (1L, 0L, 0L)
-        else if (k < 5L) (0L, 1L, 0L)
-        else (0L, 0L, 1L)
-      def atRisk(k: Long): Long = if (k < 5L) k else 0L
-      val k0 = if (count.exists()) count.get() else 0L
-      val k1 = k0 + rows.size.toLong
-      count.update(k1)
-      val ((a0, b0, c0), (a1, b1, c1)) = (bands(k0), bands(k1))
-      Iterator.single(QiBandDelta(key._2,
-        a1 - a0, b1 - b0, c1 - c0, atRisk(k1) - atRisk(k0)))
-    }
-  }
-
-  /** [[kAnonymityStream]] via transformWithState (see
-    * [[KAnonProcessor]]) — same sink contract, same delta algebra.
+  /** [[kAnonymityStream]]'s machine on transformWithState — same sink
+    * contract, same delta algebra (the spec runs both against the same
+    * corpus and batch j86).
     */
   def kAnonymityStreamTws(
       qi: Dataset[QiIn],
@@ -2075,12 +1836,39 @@ object StreamOps {
       checkpointDir: Option[String] = None)
       : org.apache.spark.sql.streaming.StreamingQuery = {
     import qi.sparkSession.implicits._
-    qi.sparkSession.conf.set(
-      "spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val deltas = qi.groupByKey(q => (q.lang, q.source, q.len_bucket))
-      .transformWithState(new KAnonProcessor,
-        TimeMode.None(), OutputMode.Update())
+    anonDeltaSink(viaValueState(qiGroups(qi), qiCount, OutputMode.Update()),
+      sink, checkpointDir)
+  }
+
+  private def qiGroups(qi: Dataset[QiIn]) = {
+    import qi.sparkSession.implicits._
+    qi.groupByKey(q => (q.lang, q.source, q.len_bucket))
+  }
+
+  /** A QI group's population count; each batch emits the risk-band
+    * transitions it caused.
+    */
+  private val qiCount =
+    Machine[(String, String, Long), Long, QiIn, QiBandDelta]("count", 0L,
+      (key, k0, rows) => {
+        def bands(k: Long): (Long, Long, Long) =
+          if (k <= 0L) (0L, 0L, 0L)
+          else if (k == 1L) (1L, 0L, 0L)
+          else if (k < 5L) (0L, 1L, 0L)
+          else (0L, 0L, 1L)
+        def atRisk(k: Long): Long = if (k < 5L) k else 0L
+        val k1 = k0 + rows.size.toLong
+        val ((a0, b0, c0), (a1, b1, c1)) = (bands(k0), bands(k1))
+        (k1, Iterator.single(QiBandDelta(key._2,
+          a1 - a0, b1 - b0, c1 - c0, atRisk(k1) - atRisk(k0))))
+      })
+
+  /** Per-batch (source, band-delta) aggregation of the k-anonymity
+    * deltas into `sink`.
+    */
+  private def anonDeltaSink(deltas: Dataset[QiBandDelta],
+      sink: Seq[AnonDelta] => Unit, checkpointDir: Option[String])
+      : org.apache.spark.sql.streaming.StreamingQuery = {
     val writer = deltas.writeStream.outputMode("update")
     checkpointDir.foreach(writer.option("checkpointLocation", _))
     writer
@@ -2112,28 +1900,28 @@ object StreamOps {
     */
   def scd2Stream(dims: Dataset[DimIn]): Dataset[Scd2Closed] = {
     import dims.sparkSession.implicits._
-    dims.groupByKey(_.custkey)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.NoTimeout()) {
-        (ck: Long, rows: Iterator[DimIn], st: GroupState[Scd2State]) =>
-          val sorted = rows.toSeq.sortBy(r => (r.dt, r.ok))
-          var cur = st.getOption.orNull
-          val closed = List.newBuilder[Scd2Closed]
-          sorted.foreach { r =>
-            val (next, closedOpt) = scd2Step(cur, r.status, r.dt)
-            closedOpt.foreach { case (c, to) =>
-              closed += Scd2Closed(ck, c.status, c.valid_from, to, c.version)
-            }
-            cur = next
-          }
-          if (cur != null) st.update(cur)
-          closed.result().iterator
-      }
+    viaGroupState(dims.groupByKey(_.custkey), scd2, OutputMode.Append())
   }
 
-  /** The ONE SCD2 island transition, shared by [[scd2Stream]],
-    * [[Scd2Processor]], and [[pitEnrichStream]] so the three surfaces
-    * cannot fork (the docContractFlags/scd2History seam discipline):
+  /** The SCD2 maintainer: a key's rows replay in (dt, ok) order; `zero`
+    * (null) is "no open version yet".
+    */
+  private val scd2 = Machine[Long, Scd2State, DimIn, Scd2Closed]("cur",
+    null, (ck, cur0, rows) => {
+      var cur = cur0
+      val closed = List.newBuilder[Scd2Closed]
+      rows.toSeq.sortBy(r => (r.dt, r.ok)).foreach { r =>
+        val (next, closedOpt) = scd2Step(cur, r.status, r.dt)
+        closedOpt.foreach { case (c, to) =>
+          closed += Scd2Closed(ck, c.status, c.valid_from, to, c.version)
+        }
+        cur = next
+      }
+      (cur, closed.result().iterator)
+    })
+
+  /** The ONE SCD2 island transition, shared by the [[scd2Stream]] machine
+    * and [[pitEnrichStream]] so the surfaces cannot fork (the docContractFlags/scd2History seam discipline):
     * given the current open version (null if none) and an arriving
     * (status, dt), returns the next open version plus the closed
     * interval the arrival produced — (previous open state, valid_to) —
@@ -2195,7 +1983,6 @@ object StreamOps {
       eventsDir: String): Dataset[Event] = {
     import spark.implicits._
     import org.apache.spark.sql.types.{LongType, TimestampType}
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     // the declared stream schema must match the files' physical type or the
     // source misreads them, so branch the DDL on the probed type exactly as
     // Tables.events branches the fix-up: BIGINT (ns-long), TIMESTAMP

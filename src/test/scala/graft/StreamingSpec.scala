@@ -5,7 +5,8 @@ import java.sql.Timestamp
 import graft.streaming._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{TTLConfig, Trigger}
+import org.apache.spark.sql.streaming.{StreamingQueryException, TTLConfig,
+  Trigger}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY §5.2.3 — the streaming = batch differential harness. Every
@@ -396,40 +397,44 @@ class StreamingSpec extends AnyFunSuite {
   test("i5 transformWithState running counts converge to batch (differential)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = runningCountsTws(in.toDS()).writeStream
-      .format("memory").queryName("tws").outputMode("update").start()
-    chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-    q.stop()
-    val streamed = spark.table("tws")
-      .groupBy("user_id").agg(max("n").as("n"))
-    val batch = Tables.events(spark, d)
-      .groupBy("user_id").agg(count(lit(1)).as("n"))
-    assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    withRocksDB {
+      val in = MemoryStream[Event]
+      val q = runningCountsTws(in.toDS()).writeStream
+        .format("memory").queryName("tws").outputMode("update").start()
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+      q.stop()
+      val streamed = spark.table("tws")
+        .groupBy("user_id").agg(max("n").as("n"))
+      val batch = Tables.events(spark, d)
+        .groupBy("user_id").agg(count(lit(1)).as("n"))
+      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    }
   }
 
   test("i5 transformWithState MapState per-type counts converge to batch") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = typeCountsTws(in.toDS()).writeStream
-      .format("memory").queryName("mapstate").outputMode("update").start()
-    chunks.foreach { c => in.addData(c); q.processAllAvailable() }
-    q.stop()
-    // final snapshot per user = the update-mode row with the largest
-    // (monotone) n_total
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("user_id").orderBy(col("n_total").desc)
-    val streamed = spark.table("mapstate")
-      .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
-      .select("user_id", "type_counts_csv")
-    val batch = Tables.events(spark, d)
-      .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
-      .groupBy("user_id")
-      .agg(concat_ws(",", sort_array(collect_list(
-        concat(col("event_type"), lit(":"), col("n")))))
-        .as("type_counts_csv"))
-    assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    withRocksDB {
+      val in = MemoryStream[Event]
+      val q = typeCountsTws(in.toDS()).writeStream
+        .format("memory").queryName("mapstate").outputMode("update").start()
+      chunks.foreach { c => in.addData(c); q.processAllAvailable() }
+      q.stop()
+      // final snapshot per user = the update-mode row with the largest
+      // (monotone) n_total
+      val w = org.apache.spark.sql.expressions.Window
+        .partitionBy("user_id").orderBy(col("n_total").desc)
+      val streamed = spark.table("mapstate")
+        .withColumn("rk", row_number().over(w)).filter(col("rk") === 1)
+        .select("user_id", "type_counts_csv")
+      val batch = Tables.events(spark, d)
+        .groupBy("user_id", "event_type").agg(count(lit(1)).as("n"))
+        .groupBy("user_id")
+        .agg(concat_ws(",", sort_array(collect_list(
+          concat(col("event_type"), lit(":"), col("n")))))
+          .as("type_counts_csv"))
+      assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    }
   }
 
   test("i1 streaming tumbling window equals batch form (complete mode)") {
@@ -587,25 +592,27 @@ class StreamingSpec extends AnyFunSuite {
   test("i5 transformWithState timers: idle key expires via handleExpiredTimer") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = activityWithTimers(in.toDS()).writeStream
-      .format("memory").queryName("activity").outputMode("append").start()
-    in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1),
-      ev(2, "2024-01-01 10:10:00", 1)))
-    q.processAllAvailable()
-    // advance the watermark well past u1.last + 30 min gap
-    in.addData(Seq(ev(3, "2024-01-01 12:00:00", 2)))
-    q.processAllAvailable()
-    in.addData(Seq(ev(4, "2024-01-01 12:05:00", 2)))
-    q.processAllAvailable()
-    q.stop()
-    val rows = spark.table("activity").as[UserActivity].collect()
-    val updates = rows.filter(r => r.user_id == 1L && r.kind == "update")
-    val expired = rows.filter(r => r.user_id == 1L && r.kind == "expired")
-    assert(updates.exists(_.n == 2L), s"missing update rows: ${rows.toSeq}")
-    assert(expired.length == 1 && expired.head.n == 2L &&
-      expired.head.recent == Seq(1L, 2L),
-      s"timer did not expire u1 exactly once with full state: ${rows.toSeq}")
+    withRocksDB {
+      val in = MemoryStream[Event]
+      val q = activityWithTimers(in.toDS()).writeStream
+        .format("memory").queryName("activity").outputMode("append").start()
+      in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1),
+        ev(2, "2024-01-01 10:10:00", 1)))
+      q.processAllAvailable()
+      // advance the watermark well past u1.last + 30 min gap
+      in.addData(Seq(ev(3, "2024-01-01 12:00:00", 2)))
+      q.processAllAvailable()
+      in.addData(Seq(ev(4, "2024-01-01 12:05:00", 2)))
+      q.processAllAvailable()
+      q.stop()
+      val rows = spark.table("activity").as[UserActivity].collect()
+      val updates = rows.filter(r => r.user_id == 1L && r.kind == "update")
+      val expired = rows.filter(r => r.user_id == 1L && r.kind == "expired")
+      assert(updates.exists(_.n == 2L), s"missing update rows: ${rows.toSeq}")
+      assert(expired.length == 1 && expired.head.n == 2L &&
+        expired.head.recent == Seq(1L, 2L),
+        s"timer did not expire u1 exactly once with full state: ${rows.toSeq}")
+    }
   }
 
   test("i5 state TTL evicts idle state between batches") {
@@ -622,28 +629,30 @@ class StreamingSpec extends AnyFunSuite {
     // SURVIVES a sub-TTL gap, is deliberately not tested).
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val in = MemoryStream[Event]
-    val q = runningCountsTws(in.toDS(),
-        TTLConfig(java.time.Duration.ofMillis(500))).writeStream
-      .format("memory").queryName("ttlevict").outputMode("update").start()
-    def awaitRows(n: Long): Unit = {
-      val deadline = System.nanoTime() + 120e9.toLong
-      while (spark.table("ttlevict").count() < n) {
-        assert(System.nanoTime() < deadline,
-          s"sink did not reach $n rows within 120 s")
-        Thread.sleep(100)
+    withRocksDB {
+      val in = MemoryStream[Event]
+      val q = runningCountsTws(in.toDS(),
+          TTLConfig(java.time.Duration.ofMillis(500))).writeStream
+        .format("memory").queryName("ttlevict").outputMode("update").start()
+      def awaitRows(n: Long): Unit = {
+        val deadline = System.nanoTime() + 120e9.toLong
+        while (spark.table("ttlevict").count() < n) {
+          assert(System.nanoTime() < deadline,
+            s"sink did not reach $n rows within 120 s")
+          Thread.sleep(100)
+        }
       }
+      in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1)))
+      awaitRows(1)
+      Thread.sleep(3000) // let the 500 ms TTL lapse
+      in.addData(Seq(ev(2, "2024-01-01 10:00:01", 1)))
+      awaitRows(2)
+      q.stop()
+      val ns = spark.table("ttlevict").as[KeyCount].collect()
+        .filter(_.user_id == 1L).map(_.n).toSeq
+      assert(ns == Seq(1L, 1L),
+        s"state survived its TTL: per-batch counts $ns (expected 1, 1)")
     }
-    in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1)))
-    awaitRows(1)
-    Thread.sleep(3000) // let the 500 ms TTL lapse
-    in.addData(Seq(ev(2, "2024-01-01 10:00:01", 1)))
-    awaitRows(2)
-    q.stop()
-    val ns = spark.table("ttlevict").as[KeyCount].collect()
-      .filter(_.user_id == 1L).map(_.n).toSeq
-    assert(ns == Seq(1L, 1L),
-      s"state survived its TTL: per-batch counts $ns (expected 1, 1)")
   }
 
   test("i5 late within-watermark event does not regress the session end") {
@@ -721,6 +730,7 @@ class StreamingSpec extends AnyFunSuite {
     q1.processAllAvailable()
     in.addData(Seq(ev(3, "2024-01-01 12:00:00", 2)))
     q1.processAllAvailable()
+    assertHdfsServed(q1)
     q1.stop() // kill mid-stream: window [10:00,11:00) not yet emitted
 
     val q2 = start() // resume from offsets + state
@@ -728,6 +738,7 @@ class StreamingSpec extends AnyFunSuite {
     q2.processAllAvailable()
     in.addData(Seq(ev(5, "2024-01-01 14:00:00", 2)))
     q2.processAllAvailable()
+    assertHdfsServed(q2)
     q2.stop()
 
     val sink = spark.read.parquet(out)
@@ -1396,28 +1407,137 @@ class StreamingSpec extends AnyFunSuite {
     * afterwards so the rest of the suite keeps certifying the default
     * provider as well — both must work.
     */
-  private def withRocksDB[T](body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = spark.conf.getOption(key)
-    spark.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try body finally prev match {
-      case Some(v) => spark.conf.set(key, v)
-      case None => spark.conf.unset(key)
+  private def withRocksDB[T](body: => T): T =
+    withConf(ProviderKey -> (StorePkg + "RocksDBStateStoreProvider"))(body)
+
+  private val ProviderKey = "spark.sql.streaming.stateStore.providerClass"
+  private val StorePkg = "org.apache.spark.sql.execution.streaming.state."
+
+  /** Run `body` with the session confs `kv` set, restoring each after. */
+  private def withConf[T](kv: (String, String)*)(body: => T): T = {
+    val prev = kv.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kv.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
     }
   }
 
-  /** Hard evidence the swapped provider actually served the query: RocksDB
-    * surfaces rocksdb* custom metrics on the state operator; the default
-    * HDFS-backed provider surfaces none.
+  /** The custom metric names of `q`'s state operators: RocksDB surfaces
+    * rocksdb* metrics there, the default HDFS-backed provider none.
     */
+  private def stateMetrics(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Seq[String] = {
+    val ops = q.recentProgress.flatMap(_.stateOperators)
+    assert(ops.nonEmpty, "the query reported no state operator")
+    ops.flatMap(_.customMetrics.keySet.toArray.map(_.toString)).toSeq
+  }
+
+  /** Hard evidence the swapped provider actually served the query. */
   private def assertRocksDbServed(
       q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
-    val metrics = q.recentProgress.flatMap(_.stateOperators)
-      .flatMap(_.customMetrics.keySet.toArray.map(_.toString))
+    val metrics = stateMetrics(q)
     assert(metrics.exists(_.startsWith("rocksdb")),
       s"no rocksdb state metrics — provider swap did not take: " +
         s"${metrics.distinct.mkString(", ")}")
+  }
+
+  /** The complement: the default HDFS-backed provider served the query. */
+  private def assertHdfsServed(
+      q: org.apache.spark.sql.streaming.StreamingQuery): Unit = {
+    val metrics = stateMetrics(q)
+    assert(!metrics.exists(_.startsWith("rocksdb")),
+      s"rocksdb state metrics on a default-provider query: " +
+        s"${metrics.distinct.mkString(", ")}")
+  }
+
+  test("transformWithState on the HDFS store fails with a clear error") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    withConf(ProviderKey -> (StorePkg + "HDFSBackedStateStoreProvider")) {
+      val in = MemoryStream[Event]
+      val q = runningCountsTws(in.toDS()).writeStream
+        .format("memory").queryName("tws_hdfs").outputMode("update").start()
+      in.addData(ev(1, "2024-01-01 10:00:00", 1))
+      val e = try intercept[StreamingQueryException](q.processAllAvailable())
+        finally q.stop()
+      assert(e.getMessage.contains("STATE_STORE_MULTIPLE_COLUMN_FAMILIES"),
+        e.getMessage)
+    }
+  }
+
+  test("building and starting every StreamOps operator leaves the session conf unchanged") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val docs = Tables.documents(spark, d)
+    val emb = Tables.embeddings(spark, d)
+    val dim = Tables.customer(spark, d).select(col("c_custkey"))
+    val index = graft.queries.LlmOps.buildNeardupIndex(docs)
+    val tmp = java.nio.file.Files.createTempDirectory("graft-conf")
+    def dir(n: String) =
+      java.nio.file.Files.createDirectories(tmp.resolve(n)).toString
+    // the store and the ns-timestamp flag named explicitly, so a builder
+    // that sets either shows up as a change whatever earlier tests left
+    withConf(ProviderKey -> (StorePkg + "HDFSBackedStateStoreProvider"),
+        "spark.sql.legacy.parquet.nanosAsLong" -> "false") {
+      val before = spark.conf.getAll
+      val events = MemoryStream[Event].toDS()
+      val built: Seq[org.apache.spark.sql.Dataset[_]] = Seq(
+        wordCount(MemoryStream[String].toDS()), runningCounts(events),
+        distinctUsersHll(events), userFreqCms(events),
+        valueQuantilesHdr(events), distinctUsersKmv(events),
+        runningTopK(events), funnelStages(events), markovTransitions(events),
+        ewmaStream(events), ewmaStreamTws(events), gapFillStream(events),
+        gapInterpStream(events), holtStream(events), cusumStream(events),
+        cusumStreamTws(events),
+        holtWintersStream(MemoryStream[HourCount].toDS()),
+        conversionPatternStream(events), tumblingCounts(events),
+        slidingCounts(events), sessionWindows(events),
+        sessionWindowsDynamic(events), sessionizeWithTimeout(events),
+        runningCountsTws(events),
+        runningCountsTws(events, TTLConfig(java.time.Duration.ofMinutes(1))),
+        activityWithTimers(events), typeCountsTws(events),
+        dedupEvents(events), enrichWithStatic(events, dim, "c_custkey"),
+        purchaseClickJoin(events), purchaseClickLeftJoin(events),
+        purchaseClickFullJoin(events), purchaseClickSemiJoin(events),
+        chunkDedupStream(MemoryStream[ChunkIn].toDS()),
+        chunkDedupStreamTws(MemoryStream[ChunkIn].toDS()),
+        ngramNoveltyStream(MemoryStream[GramIn].toDS()),
+        ngramNoveltyStreamTws(MemoryStream[GramIn].toDS()),
+        pitEnrichStream(MemoryStream[PitIn].toDS()),
+        scd2Stream(MemoryStream[DimIn].toDS()),
+        scd2StreamTws(MemoryStream[DimIn].toDS()),
+        bloomSemiReducedStream(events.toDF(), "user_id", dim),
+        eventsFileStream(spark, dir("events")))
+      assert(built.forall(_.isStreaming))
+      val vecs = MemoryStream[(Long, Seq[Float], Int)].toDS()
+        .toDF("vec_id", "embedding", "label")
+      val qi = MemoryStream[QiIn].toDS()
+      val started = Seq(
+        runningCountsForeachBatch(events)((_, _) => ()),
+        runningCountsExactlyOnce(events, dir("eo"), dir("eo-ck")),
+        neardupProbeStream(MemoryStream[(Long, String)].toDS()
+          .toDF("doc_id", "text"), index, (_, _) => ()),
+        pqEncodeStream(vecs, emb, (_, _) => ()),
+        imiAssignStream(vecs, emb, 4, (_, _) => ()),
+        imiSearchStream(MemoryStream[(Long, Seq[Float])].toDS()
+          .toDF("probe_id", "embedding"), emb, 4, 3, 3, (_, _) => ()),
+        budgetHistogramStream(MemoryStream[(Long, Long, Long, Long)].toDS()
+          .toDF("doc_id", "n_tok", "priority", "bucket"), _ => ()),
+        contractMonitorStream(MemoryStream[(Long, String, String, Long)]
+          .toDS().toDF("doc_id", "text", "lang", "n_chars"), _ => ()),
+        qualityGateStream(MemoryStream[(Long, String, String, String, Long)]
+          .toDS().toDF("doc_id", "text", "lang", "source", "n_chars"),
+          _ => ()),
+        kAnonymityStream(qi, _ => ()), kAnonymityStreamTws(qi, _ => ()))
+      started.foreach(_.stop())
+      val after = spark.conf.getAll
+      val changed = (before.keySet ++ after.keySet)
+        .filter(k => before.get(k) != after.get(k))
+      assert(changed.isEmpty, "operators changed the session conf: " +
+        changed.toSeq.sorted.map(k =>
+          s"$k: ${before.get(k)} -> ${after.get(k)}").mkString("; "))
+    }
   }
 
   test("RocksDB provider: HLL + CMS sketch state converges to the batch fold") {
@@ -1531,32 +1651,34 @@ class StreamingSpec extends AnyFunSuite {
   test("transformWithState recovers its ValueState across kill/restart") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-ckpt")
-      .toString
-    val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
-    val in = MemoryStream[Event]
+    withRocksDB {
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-tws-ckpt")
+        .toString
+      val seen = new java.util.concurrent.ConcurrentHashMap[Long, Long]()
+      val in = MemoryStream[Event]
 
-    def start() = runningCountsTws(in.toDS()).writeStream
-      .option("checkpointLocation", ckpt)
-      .outputMode("update")
-      .foreachBatch { (df: org.apache.spark.sql.Dataset[KeyCount], _: Long) =>
-        df.collect().foreach(k => seen.merge(k.user_id, k.n, math.max _))
-      }.start()
+      def start() = runningCountsTws(in.toDS()).writeStream
+        .option("checkpointLocation", ckpt)
+        .outputMode("update")
+        .foreachBatch { (df: org.apache.spark.sql.Dataset[KeyCount], _: Long) =>
+          df.collect().foreach(k => seen.merge(k.user_id, k.n, math.max _))
+        }.start()
 
-    val q1 = start()
-    in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1),
-      ev(2, "2024-01-01 10:01:00", 1),
-      ev(3, "2024-01-01 10:02:00", 1)))
-    q1.processAllAvailable()
-    q1.stop() // kill with n=3 in the state store
+      val q1 = start()
+      in.addData(Seq(ev(1, "2024-01-01 10:00:00", 1),
+        ev(2, "2024-01-01 10:01:00", 1),
+        ev(3, "2024-01-01 10:02:00", 1)))
+      q1.processAllAvailable()
+      q1.stop() // kill with n=3 in the state store
 
-    val q2 = start() // resume: state must carry the count forward
-    in.addData(Seq(ev(4, "2024-01-01 10:03:00", 1),
-      ev(5, "2024-01-01 10:04:00", 1)))
-    q2.processAllAvailable()
-    q2.stop()
-    assert(seen.get(1L) == 5L,
-      s"state not recovered: expected running count 5, saw ${seen.get(1L)}")
+      val q2 = start() // resume: state must carry the count forward
+      in.addData(Seq(ev(4, "2024-01-01 10:03:00", 1),
+        ev(5, "2024-01-01 10:04:00", 1)))
+      q2.processAllAvailable()
+      q2.stop()
+      assert(seen.get(1L) == 5L,
+        s"state not recovered: expected running count 5, saw ${seen.get(1L)}")
+    }
   }
 
   test("running top-k recovers its bounded heap state across kill/restart") {
@@ -2297,8 +2419,8 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("transformWithState chunk dedup equals the batch j75 decisions too") {
-    // the MODERN state API form (ChunkDedupProcessor, ValueState[Boolean]
-    // per chunk hash) must make the same decision on every chunk as both
+    // the MODERN state API form (ValueState[Boolean] per chunk hash)
+    // must make the same decision on every chunk as both
     // the MGWS form and the batch argmin
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -2652,30 +2774,32 @@ class StreamingSpec extends AnyFunSuite {
   test("k-anonymity monitor TWS port folds to batch j86 identically") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
-    // the dual-API differential: the transformWithState port (RocksDB
-    // provider, ValueState[Long] per QI group) must fold to the same
-    // batch j86 band counts the MGWS form does
-    val qi = graft.queries.LlmOps.qiTuples(Tables.documents(spark, d))
-      .as[(String, String, Long)].collect()
-      .map(t => QiIn(t._1, t._2, t._3)).toSeq
-    val in = MemoryStream[QiIn]
-    val deltas = scala.collection.mutable.Buffer.empty[Seq[AnonDelta]]
-    val q = StreamOps.kAnonymityStreamTws(in.toDS(), deltas += _)
-    qi.grouped((qi.size + 1) / 2).foreach { b =>
-      in.addData(b); q.processAllAvailable()
+    withRocksDB {
+      // the dual-API differential: the transformWithState port (RocksDB
+      // provider, ValueState[Long] per QI group) must fold to the same
+      // batch j86 band counts the MGWS form does
+      val qi = graft.queries.LlmOps.qiTuples(Tables.documents(spark, d))
+        .as[(String, String, Long)].collect()
+        .map(t => QiIn(t._1, t._2, t._3)).toSeq
+      val in = MemoryStream[QiIn]
+      val deltas = scala.collection.mutable.Buffer.empty[Seq[AnonDelta]]
+      val q = StreamOps.kAnonymityStreamTws(in.toDS(), deltas += _)
+      qi.grouped((qi.size + 1) / 2).foreach { b =>
+        in.addData(b); q.processAllAvailable()
+      }
+      q.stop()
+      val folded = deltas.filter(_.nonEmpty)
+        .map(s => s.head.batch_id -> s).toMap.values.flatten.toSeq
+        .groupBy(_.source).view.mapValues { ds =>
+          (ds.map(_.groups_k1).sum, ds.map(_.groups_k2_4).sum,
+            ds.map(_.groups_k5).sum, ds.map(_.docs_at_risk).sum)
+        }.toMap
+      val batch = SparkEntry.queries("j86_k_anonymity")(spark, d)
+        .as[(String, Long, Long, Long, Long, Long)].collect()
+        .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
+      assert(folded == batch,
+        s"TWS monitor deltas diverge from batch j86:\n$folded\nvs\n$batch")
     }
-    q.stop()
-    val folded = deltas.filter(_.nonEmpty)
-      .map(s => s.head.batch_id -> s).toMap.values.flatten.toSeq
-      .groupBy(_.source).view.mapValues { ds =>
-        (ds.map(_.groups_k1).sum, ds.map(_.groups_k2_4).sum,
-          ds.map(_.groups_k5).sum, ds.map(_.docs_at_risk).sum)
-      }.toMap
-    val batch = SparkEntry.queries("j86_k_anonymity")(spark, d)
-      .as[(String, Long, Long, Long, Long, Long)].collect()
-      .map(r => r._1 -> (r._2, r._3, r._4, r._5)).toMap
-    assert(folded == batch,
-      s"TWS monitor deltas diverge from batch j86:\n$folded\nvs\n$batch")
   }
 
   test("DSv2 streaming read delivers the batch table exactly, in batchRows chunks") {
