@@ -7,6 +7,8 @@ import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders,
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming._
 
+import scala.collection.mutable
+
 /** Event mirrors the `events` table schema at microsecond precision
   * (FIXTURES.md) — the stream element type for every stateful operator.
   */
@@ -585,14 +587,43 @@ object StreamOps {
       (st, Iterator.single(UserEwma(uid, st.n, st.s, st.nOoo)))
     })
 
+  /** Folds one batch into a MapState in memory: reads `state` once,
+    * merges every row into its entry (`add`, from `zero` for an unseen
+    * entry) and writes each entry the rows touched back once. Store
+    * traffic is one scan plus one put per distinct entry, whatever the row
+    * count. With an order-free `add` (a sum, a count), puts and the
+    * returned map do not depend on the order of the rows or of the scan.
+    * Returns the merged map: every entry, touched or not.
+    */
+  private def foldInto[K, V, R](state: MapState[K, V], rows: Iterator[R],
+      zero: V)(key: R => K)(add: (V, R) => V): mutable.HashMap[K, V] = {
+    val all = readAll(state)
+    val touched = mutable.HashSet.empty[K]
+    rows.foreach { r =>
+      val k = key(r)
+      all(k) = add(all.getOrElse(k, zero), r)
+      touched += k
+    }
+    touched.foreach(k => state.updateValue(k, all(k)))
+    all
+  }
+
+  private def readAll[K, V](state: MapState[K, V]): mutable.HashMap[K, V] =
+    mutable.HashMap.from(state.iterator())
+
+  /** Adds one event to its minute's (n, cents); the gap processors' fold. */
+  private def addToMinute(p: PendingMinute, e: Event): PendingMinute =
+    PendingMinute(p.n + 1, p.cents + cents(e.value))
+
+  private def minuteOf(e: Event): Long = micros(e.ts) / 60000000L
+
   /** Streaming gap-fill — the twin of the registered `n5_gapfill_ffill`
     * batch query, and the operator that shows WHY densification needs
     * event-time timers: a gap bucket has no event to trigger its emission,
     * so something else must fire when the bucket becomes final. Here that
     * is the WATERMARK: per event_type, arriving events accumulate into a
-    * pending per-minute map (bounded by the watermark lag — ~10 entries,
-    * never the series), and every batch/timer drain emits, IN ORDER, each
-    * minute whose end the watermark has passed: observed minutes with
+    * pending per-minute map, and every batch/timer drain emits, IN ORDER,
+    * each minute whose end the watermark has passed: observed minutes with
     * their (n, cents), gap minutes with n=0 and the last observed cents
     * (locf) — exactly n5's row, finalized exactly once (Append mode). An
     * event-time timer parked at the newest pending minute's end flushes
@@ -604,6 +635,16 @@ object StreamOps {
     * passes a type's whole series the emitted stream equals the batch n5
     * series row-for-row (asserted in the differential with a far-future
     * sentinel on a throwaway type to push the global watermark).
+    *
+    * `pending` holds the observed minutes not yet emitted: at most the
+    * distinct minutes one batch spans plus the watermark lag (about 4.4k
+    * entries per type for a batch of 15 days of events), never the whole
+    * series. Each batch is folded per minute before the state store is
+    * touched ([[foldInto]]), and a drain walks the minutes from that
+    * in-memory map, so the store sees one scan and one put per distinct
+    * minute, one removal per emitted observed minute, and one write each
+    * of `maxSeen`, `lastMin` and `lastCents` — not a call per event or per
+    * emitted gap minute.
     */
   final class GapFillProcessor
       extends StatefulProcessor[String, Event, GapBucket] {
@@ -623,37 +664,39 @@ object StreamOps {
         "maxSeen", Encoders.scalaLong, TTLConfig.NONE)
     }
 
-    /** Emit every complete minute in order; re-arm the flush timer.
-      * `firedAt` is the just-expired timer's stamp when called from
-      * handleExpiredTimer — it is already gone, deleting it again only
-      * logs a spurious WARN. */
+    /** Emit every complete minute of `pend` (the key's whole pending map)
+      * in order; re-arm the flush timer. `firedAt` is the just-expired
+      * timer's stamp when called from handleExpiredTimer — it is already
+      * gone, deleting it again only logs a spurious WARN. */
     private def drain(key: String, wmMs: Long,
+        pend: collection.Map[Long, PendingMinute],
         firedAt: Long = Long.MinValue): Iterator[GapBucket] = {
       val out = Vector.newBuilder[GapBucket]
       val mx = if (maxSeen.exists()) maxSeen.get() else Long.MinValue
       if (mx != Long.MinValue) {
         // first drain starts at the key's first observed minute (in-order
         // feed ⇒ it is the series min, matching batch n5's span start)
-        var cur =
+        val from =
           if (lastMin.exists()) lastMin.get() + 1
-          else {
-            var m = Long.MaxValue
-            pending.keys().foreach(k => if (k < m) m = k)
-            m
-          }
+          else if (pend.isEmpty) Long.MaxValue
+          else pend.keysIterator.min
+        var cur = from
         var carry = if (lastCents.exists()) lastCents.get() else 0L
         // bucket [m, m+1) is final once the watermark reaches its end
         while (cur <= mx && (cur + 1) * 60000L <= wmMs) {
-          if (pending.containsKey(cur)) {
-            val p = pending.getValue(cur)
-            carry = p.cents
-            out += GapBucket(key, cur, p.n, carry)
-            pending.removeKey(cur)
-          } else out += GapBucket(key, cur, 0L, carry)
-          lastMin.update(cur)
+          pend.get(cur) match {
+            case Some(p) =>
+              carry = p.cents
+              out += GapBucket(key, cur, p.n, carry)
+              pending.removeKey(cur)
+            case None => out += GapBucket(key, cur, 0L, carry)
+          }
           cur += 1
         }
-        lastCents.update(carry)
+        if (cur != from) {
+          lastMin.update(cur - 1)
+          lastCents.update(carry)
+        }
         // park the flush timer at the newest pending minute's end so the
         // tail emits when the watermark advances without new rows here
         getHandle.listTimers().foreach(t =>
@@ -666,21 +709,19 @@ object StreamOps {
     override def handleInputRows(
         key: String, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[GapBucket] = {
-      rows.foreach { e =>
-        val m = micros(e.ts) / 60000000L
-        val p = if (pending.containsKey(m)) pending.getValue(m)
-                else PendingMinute(0L, 0L)
-        pending.updateValue(m, PendingMinute(p.n + 1,
-          p.cents + StreamOps.cents(e.value)))
-        if (!maxSeen.exists() || m > maxSeen.get()) maxSeen.update(m)
-      }
-      drain(key, timerValues.getCurrentWatermarkInMs())
+      val pend = foldInto(pending, rows,
+        PendingMinute(0L, 0L))(minuteOf)(addToMinute)
+      // every pending minute was seen, so the newest pending one is the
+      // newest seen unless an earlier batch saw a newer one
+      val m = pend.keysIterator.max
+      if (!maxSeen.exists() || m > maxSeen.get()) maxSeen.update(m)
+      drain(key, timerValues.getCurrentWatermarkInMs(), pend)
     }
 
     override def handleExpiredTimer(
         key: String, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[GapBucket] =
-      drain(key, timerValues.getCurrentWatermarkInMs(),
+      drain(key, timerValues.getCurrentWatermarkInMs(), readAll(pending),
         expiredTimerInfo.getExpiryTimeInMs())
   }
 
@@ -700,11 +741,13 @@ object StreamOps {
     * never buffered at all. They are arithmetic between two anchors
     * (c_p + (c_n−c_p)·Δ DIV span, n8's exact integer form), so state is
     * the last emitted anchor (two longs) + the pending observed minutes
-    * (watermark-lag-bounded, same as locf); each observed minute that
-    * finalizes first RECONSTRUCTS and emits the whole gap run behind it,
-    * then itself. Emission remains exactly-once append, and once the
-    * watermark passes a type's series the output equals the registered
-    * batch n8 row-for-row (differential-pinned with the sentinel).
+    * (bounded as in [[GapFillProcessor]], and folded per minute the same
+    * way); each observed minute that finalizes first RECONSTRUCTS and
+    * emits the whole gap run behind it, then itself. The anchor is read
+    * and written once per drain. Emission remains exactly-once append, and
+    * once the watermark passes a type's series the output equals the
+    * registered batch n8 row-for-row (differential-pinned with the
+    * sentinel).
     */
   final class GapInterpProcessor
       extends StatefulProcessor[String, Event, InterpBucket] {
@@ -722,54 +765,52 @@ object StreamOps {
     }
 
     private def drain(key: String, wmMs: Long,
+        pend: collection.Map[Long, PendingMinute],
         firedAt: Long = Long.MinValue): Iterator[InterpBucket] = {
       val out = Vector.newBuilder[InterpBucket]
-      val ready = pending.keys().filter(m => (m + 1) * 60000L <= wmMs)
-        .toSeq.sorted
-      var maxPend = Long.MinValue
-      ready.foreach { m =>
-        val p = pending.getValue(m)
-        if (anchorPos.exists()) {
-          val (pp, cp) = (anchorPos.get(), anchorCents.get())
-          var g = pp + 1
-          // the gap run behind this anchor: pure arithmetic, no state
-          // (Scala's Long division truncates toward zero — n8's DIV)
-          while (g < m) {
-            out += InterpBucket(key, g, 0L,
-              cp + ((p.cents - cp) * (g - pp)) / (m - pp))
-            g += 1
+      val (ready, later) = pend.keys.partition(m => (m + 1) * 60000L <= wmMs)
+      if (ready.nonEmpty) {
+        var anchor =
+          if (anchorPos.exists()) Some((anchorPos.get(), anchorCents.get()))
+          else None
+        ready.toSeq.sorted.foreach { m =>
+          val p = pend(m)
+          anchor.foreach { case (pp, cp) =>
+            // the gap run behind this anchor: pure arithmetic, no state
+            // (Scala's Long division truncates toward zero — n8's DIV)
+            var g = pp + 1
+            while (g < m) {
+              out += InterpBucket(key, g, 0L,
+                cp + ((p.cents - cp) * (g - pp)) / (m - pp))
+              g += 1
+            }
           }
+          out += InterpBucket(key, m, p.n, p.cents)
+          anchor = Some((m, p.cents))
+          pending.removeKey(m)
         }
-        out += InterpBucket(key, m, p.n, p.cents)
-        anchorPos.update(m)
-        anchorCents.update(p.cents)
-        pending.removeKey(m)
+        anchor.foreach { case (pp, cp) =>
+          anchorPos.update(pp)
+          anchorCents.update(cp)
+        }
       }
-      pending.keys().foreach(k => if (k > maxPend) maxPend = k)
       getHandle.listTimers().foreach(t =>
         if (t != firedAt) getHandle.deleteTimer(t))
-      if (maxPend != Long.MinValue)
-        getHandle.registerTimer((maxPend + 1) * 60000L)
+      if (later.nonEmpty)
+        getHandle.registerTimer((later.max + 1) * 60000L)
       out.result().iterator
     }
 
     override def handleInputRows(
         key: String, rows: Iterator[Event],
-        timerValues: TimerValues): Iterator[InterpBucket] = {
-      rows.foreach { e =>
-        val m = micros(e.ts) / 60000000L
-        val p = if (pending.containsKey(m)) pending.getValue(m)
-                else PendingMinute(0L, 0L)
-        pending.updateValue(m, PendingMinute(p.n + 1,
-          p.cents + StreamOps.cents(e.value)))
-      }
-      drain(key, timerValues.getCurrentWatermarkInMs())
-    }
+        timerValues: TimerValues): Iterator[InterpBucket] =
+      drain(key, timerValues.getCurrentWatermarkInMs(), foldInto(pending,
+        rows, PendingMinute(0L, 0L))(minuteOf)(addToMinute))
 
     override def handleExpiredTimer(
         key: String, timerValues: TimerValues,
         expiredTimerInfo: ExpiredTimerInfo): Iterator[InterpBucket] =
-      drain(key, timerValues.getCurrentWatermarkInMs(),
+      drain(key, timerValues.getCurrentWatermarkInMs(), readAll(pending),
         expiredTimerInfo.getExpiryTimeInMs())
   }
 
@@ -1167,17 +1208,11 @@ object StreamOps {
     override def handleInputRows(
         key: Long, rows: Iterator[Event],
         timerValues: TimerValues): Iterator[TypeCounts] = {
-      rows.foreach { e =>
-        val cur =
-          if (counts.containsKey(e.event_type)) counts.getValue(e.event_type)
-          else 0L
-        counts.updateValue(e.event_type, cur + 1L)
-      }
-      val entries = counts.iterator().toSeq
-      val csv = entries.map { case (t, n) => s"$t:$n" }.sorted.mkString(",")
+      val all = foldInto(counts, rows, 0L)(_.event_type)((n, _) => n + 1L)
+      val csv = all.map { case (t, n) => s"$t:$n" }.toSeq.sorted.mkString(",")
       // n_total is monotone per key — the differential test uses it to pick
       // each key's final snapshot from the update-mode output
-      Iterator.single(TypeCounts(key, entries.map(_._2).sum, csv))
+      Iterator.single(TypeCounts(key, all.values.sum, csv))
     }
   }
 
@@ -1949,10 +1984,20 @@ object StreamOps {
       checkpointDir: String): DataFrame =
     spark.read.format("statestore").load(checkpointDir)
 
+  /** Files one micro-batch of [[eventsFileStream]] reads at most. */
+  private[graft] val MaxFilesPerTrigger = 32
+
   /** `eventsDir` must be a DIRECTORY of events-schema parquet files (file
     * streaming sources watch directories; new files = new micro-batches).
     * This is the engine's bulk-ingest analogue of the reference's
     * socket/Kafka source (AvailableNow gives bounded-lag backfill).
+    *
+    * Admission control: a micro-batch reads at most [[MaxFilesPerTrigger]]
+    * new files, so a backlog — files that landed while the query was
+    * down, or an `AvailableNow` backfill — is read as a series of bounded
+    * batches instead of one batch of every pending file. The bound caps
+    * what one batch's stateful operators fold in memory and write to the
+    * state store in one commit.
     *
     * File streams require an explicit schema, so the reader probes the
     * directory with a one-off batch read and mirrors [[graft.Tables.events]]'
@@ -2004,6 +2049,7 @@ object StreamOps {
     val raw = spark.readStream
       .schema(s"event_id BIGINT, ts $tsDdl, user_id BIGINT, " +
         "event_type STRING, value DOUBLE, props STRING")
+      .option("maxFilesPerTrigger", MaxFilesPerTrigger.toLong)
       .parquet(eventsDir)
     val fixed = probed match {
       case Some(LongType) =>

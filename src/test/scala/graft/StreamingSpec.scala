@@ -2003,6 +2003,31 @@ class StreamingSpec extends AnyFunSuite {
       "late-arriving file did not read through the default schema")
   }
 
+  test("streaming file source admits a bounded number of files per batch") {
+    // a backlog of 2 * bound + 1 files read under AvailableNow must arrive
+    // as 3 batches, each within the bound, that together hold every row
+    val bound = StreamOps.MaxFilesPerTrigger
+    val files = 2 * bound + 1
+    val dir = java.nio.file.Files.createTempDirectory("graft-evadmit")
+    val events = Tables.events(spark, d)
+    val total = events.count()
+    assert(total >= files, s"$total events cannot fill $files files")
+    // round-robin repartitioning gives every file total / files rows or one more
+    events.repartition(files).write.mode("overwrite").parquet(dir.toString)
+    assert(dir.toFile.listFiles().count(_.getName.endsWith(".parquet")) == files)
+    val q = StreamOps.eventsFileStream(spark, dir.toString)
+      .transform(runningCounts).writeStream
+      .format("memory").queryName("admit").outputMode("update")
+      .trigger(Trigger.AvailableNow()).start()
+    q.awaitTermination(60000)
+    val sizes = q.recentProgress.map(_.numInputRows).filter(_ > 0).toSeq
+    assert(sizes.size == 3, s"batch sizes $sizes")
+    assert(sizes.forall(_ <= bound * (total / files + 1)), s"batch sizes $sizes")
+    assert(sizes.sum == total)
+    assert(spark.table("admit").groupBy("user_id", "event_type")
+      .agg(max("n").as("n")).agg(sum("n")).head().getLong(0) == sizes.sum)
+  }
+
   test("streaming media ingest: binaryFile backfill through the decode stage") {
     // raw asset files land in a watched directory; the glob prunes at
     // listing time, each matching file becomes a MediaItem, and the SAME
@@ -3611,6 +3636,100 @@ class StreamingSpec extends AnyFunSuite {
           col("n"), col("ff_cents"))
       val batch = SparkEntry.queries("n5_gapfill_ffill")(spark, d)
       assert(streamed.except(batch).isEmpty && batch.except(streamed).isEmpty)
+    }
+  }
+
+  /** Feeds one gap processor's query the batches `feed`, then the two
+    * watermark sentinels that make every real minute final; returns the
+    * query (stopped) for its progress. */
+  private def runGapQuery(name: String,
+      build: org.apache.spark.sql.Dataset[Event] =>
+        org.apache.spark.sql.DataFrame,
+      feed: Seq[Seq[Event]]): org.apache.spark.sql.streaming.StreamingQuery = {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val in = MemoryStream[Event]
+    val q = build(in.toDS()).writeStream
+      .format("memory").queryName(name).outputMode("append").start()
+    feed.foreach { b => in.addData(b); q.processAllAvailable() }
+    val maxTs = feed.flatten.map(_.ts.getTime).max
+    Seq(30, 31).foreach { lag =>
+      in.addData(ev(999990L + lag, "2024-01-01 00:00:00", 999999L, "wmflush")
+        .copy(ts = new Timestamp(maxTs + lag * 60000L)))
+      q.processAllAvailable()
+    }
+    q.stop()
+    q
+  }
+
+  private val gapQueries = Seq[(String, org.apache.spark.sql.Dataset[Event] =>
+      org.apache.spark.sql.DataFrame)](
+    "gapfill" -> (gapFillStream(_).toDF()),
+    "gapinterp" -> (gapInterpStream(_).toDF()))
+
+  test("gap-fill and interpolation write state per distinct minute, not per event or emitted minute") {
+    // N = 450 events over M = 90 distinct (type, minute) pairs: 3 types,
+    // 30 observed minutes each spread over an 88-minute span, 5 events per
+    // minute, shuffled. The insert batch may write each pair once plus a
+    // few values per key; the later batches, which only drain the real
+    // keys (and take one sentinel row each), only the per-key values.
+    val types = Seq("click", "view", "purchase")
+    val t0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime
+    val evs = new scala.util.Random(7).shuffle(for {
+      t <- types; k <- 0 until 30; j <- 0 until 5
+    } yield Event(0L, new Timestamp(t0 + k * 3 * 60000L + j * 7000L), 1L, t,
+      1.0 + j, "{}")).zipWithIndex.map { case (e, i) => e.copy(event_id = i) }
+    val m = types.size * 30
+    val perKey = 4
+    val keys = types.size + 1 // the sentinel type is a key too
+    withRocksDB {
+      gapQueries.foreach { case (name, build) =>
+        val q = runGapQuery(s"${name}_budget", build, Seq(evs))
+        // an idle progress event repeats its batch id with zero updates
+        val updated = q.recentProgress.toSeq.groupMapReduce(_.batchId)(
+          _.stateOperators.map(_.numRowsUpdated).sum)(math.max).toSeq.sorted
+        val insert = updated.head._2
+        val drains = updated.tail.map(_._2).sum
+        assert(insert <= m + perKey * types.size,
+          s"$name: insert batch updated $insert state rows for $m minutes")
+        assert(drains <= perKey * keys,
+          s"$name: drain batches updated $drains state rows " +
+            s"(${updated.mkString(", ")})")
+        // and the drain did happen: every minute of each type's span
+        assert(spark.table(s"${name}_budget")
+          .filter(col("event_type") =!= "wmflush").count() == 3 * 88)
+      }
+    }
+  }
+
+  test("a minute split across batches and rows emits the summed n and cents") {
+    import spark.implicits._
+    // minute 1 gets one event in batch 1 and two in batch 2; minute 0 two
+    // in batch 1; minute 2 is a gap; rows are not in time order
+    val b1 = Seq(ev(1, "2024-01-01 00:01:30", 1, v = 0.5),
+      ev(2, "2024-01-01 00:00:10", 1, v = 1.0),
+      ev(3, "2024-01-01 00:00:50", 1, v = 2.0))
+    val b2 = Seq(ev(4, "2024-01-01 00:03:05", 1, v = 4.0),
+      ev(5, "2024-01-01 00:01:59", 1, v = 0.25),
+      ev(6, "2024-01-01 00:01:00", 1, v = 0.1))
+    val m0 = Timestamp.valueOf("2024-01-01 00:00:00").getTime / 60000L
+    // gap-fill carries minute 1's cents into minute 2; interpolation puts
+    // 85 + (400 - 85) * 1 DIV 2 = 242 there
+    val expected = Map(
+      "gapfill" -> Seq((0L, 2L, 300L), (1L, 3L, 85L), (2L, 0L, 85L),
+        (3L, 1L, 400L)),
+      "gapinterp" -> Seq((0L, 2L, 300L), (1L, 3L, 85L), (2L, 0L, 242L),
+        (3L, 1L, 400L)))
+    withRocksDB {
+      gapQueries.foreach { case (name, build) =>
+        runGapQuery(s"${name}_split", build, Seq(b1, b2))
+        val got = spark.table(s"${name}_split")
+          .filter(col("event_type") === "click")
+          .select(col("epoch_min") - m0, col("n"), col(
+            if (name == "gapfill") "ff_cents" else "li_cents"))
+          .as[(Long, Long, Long)].collect().sorted.toSeq
+        assert(got == expected(name), s"$name: $got")
+      }
     }
   }
 
